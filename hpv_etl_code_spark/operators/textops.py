@@ -25,7 +25,7 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "fr": ("le", "la", "les", "et", "des", "du", "une", "est"),
 }
 #: Priority order for deterministic argmax tie-breaking.
-LANG_PRIORITY = ("en", "de", "es", "fr")
+LANG_ORDER = ("en", "de", "es", "fr")
 
 
 def tokens(col: Column | str, pattern: str = " ") -> Column:
@@ -128,12 +128,12 @@ def lang_scores(col: Column | str) -> dict[str, Column]:
 
 def lang_id(col: Column | str) -> Column:
     """Deterministic argmax over language scores, priority-ordered
-    tie-break (LANG_PRIORITY): the first language whose score equals the
+    tie-break (LANG_ORDER): the first language whose score equals the
     max wins. A score of 0 across the board → 'und' (undetermined)."""
     scores = lang_scores(col)
     mx = F.greatest(*scores.values())
     expr = F.lit("und")
-    for lang in reversed(LANG_PRIORITY):
+    for lang in reversed(LANG_ORDER):
         expr = F.when(scores[lang] == mx, F.lit(lang)).otherwise(expr)
     return F.when(mx == 0, F.lit("und")).otherwise(expr)
 

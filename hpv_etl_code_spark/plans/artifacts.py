@@ -8,7 +8,9 @@ strategies, selected per call or globally via
 
 - ``checkpoint`` (the LOCAL-master default since optimization round 9;
   round 10 made the default deploy-mode-aware — a cluster master
-  defaults to ``parquet`` instead, see :func:`stage_storage`) —
+  defaults to ``parquet`` when ``SPARK_GRAFT_ARTIFACT_DIR`` names
+  shared storage and to ``memory`` otherwise, see
+  :func:`stage_storage`) —
   ``localCheckpoint(eager=True)``: blocks live in the block manager
   like a persist, AND the logical plan is truncated to a leaf
   (``LogicalRDD``). The truncation is the point: the dedup/pipeline
@@ -35,9 +37,10 @@ strategies, selected per call or globally via
 - ``none`` — pass-through (recompute per branch); the measurement
   baseline.
 
-Artifacts are cached per (SparkSession, name): the caller's ``name``
-must uniquely identify the frame CONTENT within a session (include the
-sf_dir / table identity), exactly like ``plans/shared_cache.py`` keys.
+Artifacts are cached per (SparkSession, name, storage): the caller's
+``name`` must uniquely identify the frame CONTENT within a session
+(include the sf_dir / table identity), exactly like
+``plans/shared_cache.py`` keys.
 
 Results are storage-invariant by construction — every strategy
 materializes the same rows (equivalence-tested in
@@ -58,18 +61,20 @@ _DIR_ENV = "SPARK_GRAFT_ARTIFACT_DIR"
 _REUSE_ENV = "SPARK_GRAFT_ARTIFACT_REUSE"
 _STRATEGIES = ("checkpoint", "memory", "parquet", "none")
 
-# (applicationId, name, fingerprint-or-content-key) → materialized frame
-_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# (applicationId, name, fingerprint-or-content-key, storage) → materialized
+# frame; storage is part of the key so a parquet request is never served
+# a frame staged under another strategy
+_CACHE: dict[tuple[str, str, str, str], DataFrame] = {}
 # Serializes build-and-insert per key so two threads staging the same
 # artifact never double-build (the same race the recursive-CTE conf
 # override was locked against in round 6). One global mutex guards the
 # dicts; the per-key lock is held across the (possibly long) build so
 # DIFFERENT artifacts still build concurrently.
 _CACHE_MUTEX = threading.Lock()
-_KEY_LOCKS: dict[tuple[str, str, str], threading.Lock] = {}
+_KEY_LOCKS: dict[tuple[str, str, str, str], threading.Lock] = {}
 
 
-def _key_lock(key: tuple[str, str, str]) -> threading.Lock:
+def _key_lock(key: tuple[str, str, str, str]) -> threading.Lock:
     with _CACHE_MUTEX:
         return _KEY_LOCKS.setdefault(key, threading.Lock())
 
@@ -77,14 +82,16 @@ def _key_lock(key: tuple[str, str, str]) -> threading.Lock:
 def stage_storage(spark=None) -> str:
     """The session-default strategy: ``$SPARK_GRAFT_STAGE_STORAGE`` if
     set, else deploy-mode-aware (VERDICT r9 #5 / ADVICE r9): a
-    ``local[*]`` master defaults to ``checkpoint`` (the single JVM dies
-    with its executor anyway, so checkpoint's no-lineage blocks lose
-    nothing and the plan truncation is pure win), while a CLUSTER
-    master defaults to ``parquet`` — ``localCheckpoint`` blocks are
-    unrecoverable on executor loss, so a default that lands on a real
-    cluster must be the durable one. Unknown values fail loudly — a
-    typo silently degrading to recompute-per-branch would be a 100 TB
-    performance bug."""
+    ``local`` / ``local[N]`` master defaults to ``checkpoint`` (the
+    single JVM dies with its executor anyway, so checkpoint's no-lineage
+    blocks lose nothing and the plan truncation is pure win), while any
+    other master (``local-cluster[...]`` included) is a CLUSTER master:
+    ``localCheckpoint`` blocks are unrecoverable on executor loss, so it
+    defaults to ``parquet`` under ``$SPARK_GRAFT_ARTIFACT_DIR`` — the
+    shared storage a cluster run points it at — or to ``memory``
+    (recomputable lineage) when that is unset. Unknown values fail
+    loudly — a typo silently degrading to recompute-per-branch would be
+    a 100 TB performance bug."""
     s = os.environ.get(_STORAGE_ENV)
     if s is not None:
         if s not in _STRATEGIES:
@@ -99,9 +106,11 @@ def stage_storage(spark=None) -> str:
             SparkSession.getActiveSession()
             or SparkSession._instantiatedSession
         )
-    if spark is not None and not spark.sparkContext.master.startswith("local"):
-        return "parquet"
-    return "checkpoint"
+    if spark is None or re.match(r"local(\[|$)", spark.sparkContext.master):
+        return "checkpoint"
+    # parquet needs storage every executor can reach; the node-local
+    # tempdir fallback would scatter the files over executor disks
+    return "parquet" if os.environ.get(_DIR_ENV) else "memory"
 
 
 def stage_artifact(
@@ -127,7 +136,7 @@ def stage_artifact(
     # deterministic plans with equal text produce equal rows, so a
     # fingerprint hit is a true content hit
     fp = _plan_fingerprint(df)
-    key = (spark.sparkContext.applicationId, name, fp)
+    key = (spark.sparkContext.applicationId, name, fp, storage)
     if key in _CACHE:
         return _CACHE[key]
     with _key_lock(key):
@@ -165,7 +174,9 @@ def stage_artifact_from(
     storage = stage_storage(spark) if storage is None else storage
     if storage == "none":
         return builder()
-    key = (spark.sparkContext.applicationId, name, f"ck:{content_key}")
+    key = (
+        spark.sparkContext.applicationId, name, f"ck:{content_key}", storage
+    )
     if key in _CACHE:
         return _CACHE[key]
     with _key_lock(key):

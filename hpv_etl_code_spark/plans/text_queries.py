@@ -183,7 +183,7 @@ _LANG_SCORE_SQL = {
     lang: (
         f"len(list_intersect(dtoks, {_STOP_SQL[lang]})) * 1.0 / greatest(len(dtoks), 1)"
     )
-    for lang in textops.LANG_PRIORITY
+    for lang in textops.LANG_ORDER
 }
 TEXT_LANG_ID_SQL = f"""
 WITH t AS (

@@ -117,9 +117,10 @@ def test_invalid_inputs_raise(spark, monkeypatch):
 def test_default_storage_is_deploy_mode_aware(spark, monkeypatch):
     """VERDICT r9 #5 / ADVICE r9: with no env override, a local master
     defaults to checkpoint (single JVM — plan truncation is pure win),
-    a CLUSTER master to parquet (localCheckpoint blocks are
-    unrecoverable on executor loss, so the default that lands on a real
-    cluster must be the durable one). The env override wins always."""
+    a CLUSTER master to parquet under SPARK_GRAFT_ARTIFACT_DIR
+    (localCheckpoint blocks are unrecoverable on executor loss, so the
+    default that lands on a real cluster must be the durable one) or to
+    memory when no artifact dir is set. The env override wins always."""
 
     class _Ctx:
         def __init__(self, master):
@@ -130,14 +131,38 @@ def test_default_storage_is_deploy_mode_aware(spark, monkeypatch):
             self.sparkContext = _Ctx(master)
 
     monkeypatch.delenv("SPARK_GRAFT_STAGE_STORAGE", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", "/shared/artifacts")
+    assert stage_storage(_Stub("local")) == "checkpoint"
     assert stage_storage(_Stub("local[32]")) == "checkpoint"
     assert stage_storage(_Stub("local[*]")) == "checkpoint"
     assert stage_storage(_Stub("spark://host:7077")) == "parquet"
     assert stage_storage(_Stub("yarn")) == "parquet"
     assert stage_storage(_Stub("k8s://https://host:443")) == "parquet"
+    # local-cluster runs separate executor JVMs: a cluster master
+    assert stage_storage(_Stub("local-cluster[2,1,1024]")) == "parquet"
     assert stage_storage(spark) == "checkpoint"  # the test session is local
+    # without a shared artifact dir, parquet would land on node-local
+    # tempdirs, so a cluster master falls back to memory
+    monkeypatch.delenv("SPARK_GRAFT_ARTIFACT_DIR")
+    assert stage_storage(_Stub("yarn")) == "memory"
+    assert stage_storage(_Stub("spark://host:7077")) == "memory"
+    assert stage_storage(_Stub("local-cluster[2,1,1024]")) == "memory"
+    assert stage_storage(_Stub("local[4]")) == "checkpoint"
+    monkeypatch.setenv("SPARK_GRAFT_STAGE_STORAGE", "parquet")
+    assert stage_storage(_Stub("yarn")) == "parquet"
     monkeypatch.setenv("SPARK_GRAFT_STAGE_STORAGE", "memory")
     assert stage_storage(_Stub("yarn")) == "memory"
+
+
+def test_cache_key_includes_storage(spark):
+    """A parquet request for a name already staged in memory must get
+    the parquet read-back, not the cached persist."""
+    df = spark.range(10)
+    mem = stage_artifact(df, "storage_key_test", storage="memory")
+    assert mem.inputFiles() == []
+    pq = stage_artifact(df, "storage_key_test", storage="parquet")
+    assert pq is not mem
+    assert pq.inputFiles(), "second frame must read the parquet artifact"
 
 
 def test_clear_cache_keeps_checkpoint_blocks_alive_for_holders(spark):
