@@ -29,7 +29,7 @@ class CatalogEntry:
     name: str
     fn: QueryFn
     oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
-    headline: bool = False  # include in bench.py
+    headline: bool = False  # in docs/PLANS.md and the profile scripts
 
 
 _ENTRIES: dict[str, CatalogEntry] = {}

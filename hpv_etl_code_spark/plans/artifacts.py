@@ -113,22 +113,30 @@ def stage_storage(spark=None) -> str:
     return "parquet" if os.environ.get(_DIR_ENV) else "memory"
 
 
+def _checked_storage(spark, name: str, storage: str | None) -> str:
+    """Resolve ``storage`` (``None`` → :func:`stage_storage`) and reject
+    an unknown strategy or a name that is not filesystem-safe, whatever
+    the strategy — the checks both staging functions run first."""
+    storage = stage_storage(spark) if storage is None else storage
+    if storage not in _STRATEGIES:
+        raise ValueError(f"storage={storage!r}: expected one of {_STRATEGIES}")
+    if not re.fullmatch(r"[A-Za-z0-9._\-]+", name):
+        raise ValueError(
+            f"artifact name {name!r} must be filesystem-safe "
+            "([A-Za-z0-9._-]+) — it becomes a directory name"
+        )
+    return storage
+
+
 def stage_artifact(
     df: DataFrame, name: str, storage: str | None = None
 ) -> DataFrame:
     """Materialize ``df`` once under ``name`` and return the frame every
     downstream branch should read. ``storage=None`` uses
     :func:`stage_storage`; see the module docstring for strategies."""
-    storage = stage_storage(df.sparkSession) if storage is None else storage
-    if storage not in _STRATEGIES:
-        raise ValueError(f"storage={storage!r}: expected one of {_STRATEGIES}")
+    storage = _checked_storage(df.sparkSession, name, storage)
     if storage == "none":
         return df
-    if not re.fullmatch(r"[A-Za-z0-9._\-]+", name):
-        raise ValueError(
-            f"artifact name {name!r} must be filesystem-safe "
-            "([A-Za-z0-9._-]+) — it becomes a directory name"
-        )
     spark = df.sparkSession
     # key includes a fingerprint of the ANALYZED logical plan: two
     # frames sharing a name but holding different content (e.g. the
@@ -171,7 +179,7 @@ def stage_artifact_from(
     full build cost on every call just to discover the hit. Keyed on
     the caller-supplied ``content_key`` (e.g. the sf_dir) instead;
     ``builder()`` runs only on a miss."""
-    storage = stage_storage(spark) if storage is None else storage
+    storage = _checked_storage(spark, name, storage)
     if storage == "none":
         return builder()
     key = (
@@ -184,10 +192,6 @@ def stage_artifact_from(
             return _CACHE[key]
         _prune_dead_entries()
         if storage == "parquet":
-            if not re.fullmatch(r"[A-Za-z0-9._\-]+", name):
-                raise ValueError(
-                    f"artifact name {name!r} must be filesystem-safe"
-                )
             path = _artifact_path(spark, name, _key_digest(content_key))
             # cross-session rehydration (VERDICT r6 #6): with
             # SPARK_GRAFT_ARTIFACT_REUSE=1 a completed artifact from a
@@ -254,7 +258,7 @@ def _reuse_enabled() -> bool:
     ``SPARK_GRAFT_ARTIFACT_DIR`` at reliable shared storage) and keys
     honor the content-identity contract (they do: plan fingerprints
     fold normalized analyzed-plan text + ``df.semanticHash()`` — see
-    :func:`_fingerprint`, which is immune to CacheManager substitution
+    :func:`_plan_fingerprint`, which is immune to CacheManager substitution
     unlike the retired inputFiles() component; content_keys are
     caller-owned)."""
     return os.environ.get(_REUSE_ENV, "") == "1"

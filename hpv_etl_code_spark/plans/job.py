@@ -75,8 +75,10 @@ def melted_to_final(melted: DataFrame, extract_date: dt.date) -> DataFrame:
 
 
 def run_hpv_job(spark: SparkSession, config: JobConfig) -> int:
-    """Discover → transform → truncate-load; returns rows written (the
-    reference prints this count, database_util.py:54)."""
+    """Discover → transform → truncate-load; returns the output's row
+    count after the load (the reference prints this count,
+    database_util.py:54). An incremental run replaces only the years in
+    the batch, and the count covers every year in the output."""
     # format from the glob — .xlsx files go through the stdlib Excel
     # parser (the reference's actual input format), anything else CSV
     reader = (

@@ -2,11 +2,14 @@
 family, built by REUSING the granular entries' column expressions (same
 single scan, no extra shuffles).
 
-Why these exist: the driver's correctness gate checks a bounded number
-of catalog entries in registration order. The granular sibling entries
-(window_running_sum / window_lag_delta / …) stay registered for users
-and for the long-tail check; these merged entries guarantee every family
-lands inside the gate's window:
+Each entry checks a whole operator family against one oracle in one
+pass. The granular siblings (window_running_sum / window_trailing_range
+/ json_extract_events / …) stay registered with their own oracles and
+check each function alone; the merged entries check the functions
+COMPOSED in one plan — e.g. ``window_frames`` evaluates a ROWS frame, an
+offset function and a RANGE frame over one shared exchange, and
+``event_funcs_battery`` parses JSON and builds maps in one projection;
+no sibling does either. The entries:
 
 - ``window_frames``      = running sum (ROWS frame) + lag delta + trailing
                            RANGE frame, one scan of orders, one exchange.

@@ -84,12 +84,12 @@ def materialize(df: DataFrame) -> int:
     projections collapse to a parquet-footer count, windows with no
     downstream filter vanish, and unique-key left joins are eliminated
     outright (round-9 audit: 21 catalog entries collapsed to a bare
-    source count under ``.count()``, including two bench headliners).
+    source count under ``.count()``, including two headline entries).
     Executing the DataFrame's already-planned ``executedPlan`` at the
     RDD level (the same seam :func:`execute_and_profile` uses) computes
     every output column with zero re-optimization and no extra hashing
-    cost — the honest timing action for bench.py and the scale
-    rehearsal."""
+    cost — the honest timing action for the benchmark
+    (``perfbench/``), the profile scripts and the scale rehearsal."""
     return df._jdf.queryExecution().executedPlan().execute().count()
 
 

@@ -26,8 +26,11 @@ def overwrite_parquet(
     partition_by: Sequence[str] | None = None,
     dynamic: bool = False,
 ) -> int:
-    """Truncate-and-load a parquet destination; returns rows written
-    (the reference prints this count, database_util.py:54)."""
+    """Truncate-and-load a parquet destination; returns the
+    destination's row count read back after the load (the reference
+    prints this count, database_util.py:54). With ``dynamic=True`` only
+    the partitions present in ``df`` are replaced, and the count covers
+    every partition of the destination, not just this batch."""
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)

@@ -8,7 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from hpv_etl_code_spark.plans import artifacts
-from hpv_etl_code_spark.plans.artifacts import stage_artifact, stage_storage
+from hpv_etl_code_spark.plans.artifacts import (
+    stage_artifact,
+    stage_artifact_from,
+    stage_storage,
+)
 
 
 @pytest.fixture(autouse=True)
@@ -105,6 +109,11 @@ def test_invalid_inputs_raise(spark, monkeypatch):
         stage_artifact(df, "x", storage="disk")
     with pytest.raises(ValueError, match="filesystem-safe"):
         stage_artifact(df, "../escape", storage="memory")
+    # the builder-deferred variant runs the same checks on every strategy
+    with pytest.raises(ValueError, match="expected one of"):
+        stage_artifact_from(spark, lambda: df, "x", "ck", storage="disk")
+    with pytest.raises(ValueError, match="filesystem-safe"):
+        stage_artifact_from(spark, lambda: df, "../escape", "ck", storage="memory")
     monkeypatch.setenv("SPARK_GRAFT_STAGE_STORAGE", "bogus")
     with pytest.raises(ValueError, match="expected one of"):
         stage_storage()

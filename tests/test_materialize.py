@@ -1,12 +1,11 @@
-"""plans/profile.py::materialize — the honest bench action.
+"""plans/profile.py::materialize — the honest timing action of the
+benchmark and the profile scripts.
 
 ``df.count()`` lets Catalyst re-optimize the count aggregate and prune
 every row-preserving subtree, so timing via count() measured a bare
-parquet-footer read for 21 catalog entries through round 9 (see
-scripts/audit_count_pruning.py and ADJUDICATED.md round-9).
-``materialize`` executes the DataFrame's OWN physical plan; these tests
-pin that contract so a future refactor cannot quietly reintroduce the
-hollow action.
+parquet-footer read for 21 catalog entries. ``materialize`` executes
+the DataFrame's OWN physical plan; these tests pin that contract so a
+future refactor cannot quietly reintroduce the hollow action.
 """
 
 from __future__ import annotations

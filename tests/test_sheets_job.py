@@ -75,11 +75,13 @@ def test_incremental_job_overwrites_only_present_years(spark, tmp_path):
     n_2023 = base.filter("ACADEMIC_YEAR_END_DATE = 2023").count()
     assert n_2023 > 0
 
-    run_hpv_job(
+    n_after = run_hpv_job(
         spark,
         JobConfig(str(inc_dir / "*.csv"), out, hpv_fixture.EXTRACT_DATE, True),
     )
     after = spark.read.parquet(out)
+    # the returned count is the whole output's, not just the 2024 batch
+    assert n_after == after.count()
     # 2023 partition untouched; 2024 replaced with the doubled batch
     assert after.filter("ACADEMIC_YEAR_END_DATE = 2023").count() == n_2023
     camden = after.filter(
